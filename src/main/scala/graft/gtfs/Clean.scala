@@ -1,12 +1,12 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** gtfsclean's flag-controlled cleaning transforms (SURVEY.md §2.4
-  * C1-C19; flags assembled at /root/reference/import.sh:44-111), as
-  * DataFrame → DataFrame programs over a [[Clean.Feed]].
+/** gtfsclean's cleaning transforms (SURVEY.md §2.4 C1-C19) under the
+  * reference's fixed flag set (import.sh:44-111), as DataFrame →
+  * DataFrame programs over a [[Clean.Feed]].
   *
   * Scale design: every merge is groupBy-attrs + min(id) canonical +
   * remap join (no collects of fact-scale state); ordered-collect
@@ -19,25 +19,15 @@ object Clean {
   /** A GTFS feed: entity name → DataFrame (missing entities absent). */
   type Feed = Map[String, DataFrame]
 
-  /** Mirror of the reference's flag defaults (import.sh:44-100). */
-  final case class Config(
-      defaultOnErrs: Boolean = true,       // C2
-      dropErrs: Boolean = true,            // C3
-      checkNullCoords: Boolean = true,     // C4
-      keepAdditionalFields: Boolean = false, // C5 (off = drop non-spec cols)
-      keepIds: Boolean = true,             // C6
-      minShapes: Boolean = true,           // C7
-      minShapesEpsilonDeg: Double = 1e-5,
-      minimizeServices: Boolean = true,    // C8
-      minimizeStoptimes: Boolean = true,   // C9
-      deleteOrphans: Boolean = true,       // C10
-      removeRedAgencies: Boolean = true,   // C11
-      removeRedRoutes: Boolean = true,     // C12
-      removeRedServices: Boolean = true,   // C13
-      removeRedShapes: Boolean = true,     // C14
-      removeRedStops: Boolean = true,      // C15
-      removeRedTrips: Boolean = true,      // C16
-      enabled: Boolean = true)             // C17 GTFSTIDY_BEFORE_IMPORT
+  /** The reference runs gtfsclean with a fixed flag set
+    * (import.sh:44-111); its only switch is GTFSTIDY_BEFORE_IMPORT, which
+    * turns the whole stage on or off (C17). */
+  final case class Config(enabled: Boolean = true) {
+    def minShapesEpsilonDeg: Double = MinShapesEpsilonDeg
+  }
+
+  /** C7 Douglas-Peucker tolerance, in degrees. */
+  val MinShapesEpsilonDeg = 1e-5
 
   /** Lineage barrier between pipeline stages. Each cleaning stage
     * re-references several entities' plans; composed lazily, the
@@ -55,28 +45,28 @@ object Clean {
   private def barrier(feed: Feed): Feed =
     feed.map { case (n, df) => n -> graft.ops.Checkpoints.pin(df) }
 
-  /** Run the enabled stages in the reference's order. */
-  def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed = {
-    if (!cfg.enabled) return feed // C17 bypass (import.sh:38)
-    var f = feed
-    def step(enabled: Boolean, stage: Feed => Feed): Unit =
-      if (enabled) f = barrier(stage(f))
-    step(!cfg.keepAdditionalFields, keepSpecColumns)
-    step(cfg.defaultOnErrs, defaultOnErrs)
-    step(cfg.dropErrs, dropErrs)
-    step(cfg.checkNullCoords, checkNullCoords)
-    step(cfg.removeRedAgencies, removeRedundantAgencies)
-    step(cfg.removeRedStops, removeRedundantStops)
-    step(cfg.removeRedRoutes, removeRedundantRoutes)
-    step(cfg.removeRedServices, removeRedundantServices(_))
-    step(cfg.minimizeServices, minimizeServices(_))
-    step(cfg.minimizeStoptimes, minimizeStopTimes(_))
-    step(cfg.minShapes, minShapes(_, cfg.minShapesEpsilonDeg))
-    step(cfg.removeRedShapes, removeRedundantShapes)
-    step(cfg.removeRedTrips, removeRedundantTrips)
-    step(cfg.deleteOrphans, deleteOrphans)
-    f
-  }
+  /** The cleaning pipeline, in the reference's order: each stage's
+    * name (as written to the per-import clean log) and transform. */
+  def stages(implicit spark: SparkSession): Seq[(String, Feed => Feed)] = Seq(
+    "keep-spec-columns" -> keepSpecColumns,
+    "default-on-errs" -> defaultOnErrs,
+    "drop-errs" -> dropErrs,
+    "check-null-coords" -> checkNullCoords,
+    "remove-red-agencies" -> removeRedundantAgencies,
+    "remove-red-stops" -> removeRedundantStops,
+    "remove-red-routes" -> removeRedundantRoutes,
+    "remove-red-services" -> (removeRedundantServices(_)),
+    "minimize-services" -> (minimizeServices(_)),
+    "minimize-stoptimes" -> (minimizeStopTimes(_)),
+    "min-shapes" -> (minShapes(_, MinShapesEpsilonDeg)),
+    "remove-red-shapes" -> removeRedundantShapes,
+    "remove-red-trips" -> removeRedundantTrips,
+    "delete-orphans" -> deleteOrphans)
+
+  /** Run every stage in order, with a [[barrier]] after each. */
+  def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed =
+    if (!cfg.enabled) feed // C17 bypass (import.sh:38)
+    else stages.foldLeft(feed) { case (f, (_, stage)) => barrier(stage(f)) }
 
   // C5 --keep-additional-fields=off: project to spec columns only.
   def keepSpecColumns(feed: Feed): Feed =
@@ -141,16 +131,22 @@ object Clean {
       case None => feed
     }
 
-  /** Generic redundant-entity merge: group rows equal on `attrs`,
-    * canonical id = min(id) (deterministic, C6-compatible —
-    * SURVEY.md §7.4 #5), return (deduped entity, id→canonical remap). */
-  private def mergeOn(df: DataFrame, id: String, attrs: Seq[String])
+  /** Canonical id of every row = min(id) over the rows with equal `key`
+    * (deterministic, C6-compatible — SURVEY.md §7.4 #5). Returns the
+    * (id, canonical) remap and the rows whose id is canonical. */
+  private def canonicalIds(df: DataFrame, id: String, key: Seq[Column])
       : (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(attrs.map(c =>
-      coalesce(col(c).cast("string"), lit("\u2400null"))): _*)
-    val withCanon = df.withColumn("_canonical", min(col(id)).over(w))
-    val remap = withCanon.select(col(id), col("_canonical").as("canonical"))
-    val deduped = withCanon.where(col(id) === col("_canonical")).drop("_canonical")
+    val withCanon = df.withColumn("canonical", min(col(id)).over(Window.partitionBy(key: _*)))
+    (withCanon.select(col(id), col("canonical")),
+      withCanon.where(col(id) === col("canonical")).drop("canonical"))
+  }
+
+  /** Generic redundant-entity merge: rows equal on every column but `id`
+    * collapse onto the canonical id. Returns (deduped entity,
+    * id→canonical remap). */
+  private def mergeOn(df: DataFrame, id: String): (DataFrame, DataFrame) = {
+    val (remap, deduped) = canonicalIds(df, id, df.columns.filterNot(_ == id).toSeq
+      .map(c => coalesce(col(c).cast("string"), lit("\u2400null"))))
     (deduped, remap)
   }
 
@@ -166,8 +162,7 @@ object Clean {
   def removeRedundantAgencies(feed: Feed): Feed =
     (feed.get("agency"), feed.get("routes")) match {
       case (Some(agency), routesOpt) =>
-        val attrs = agency.columns.filterNot(_ == "agency_id").toSeq
-        val (deduped, remap) = mergeOn(agency, "agency_id", attrs)
+        val (deduped, remap) = mergeOn(agency, "agency_id")
         val f1 = feed.updated("agency", deduped)
         routesOpt match {
           case Some(routes) if routes.columns.contains("agency_id") =>
@@ -181,8 +176,7 @@ object Clean {
   def removeRedundantRoutes(feed: Feed): Feed =
     (feed.get("routes"), feed.get("trips")) match {
       case (Some(routes), tripsOpt) =>
-        val attrs = routes.columns.filterNot(_ == "route_id").toSeq
-        val (deduped, remap) = mergeOn(routes, "route_id", attrs)
+        val (deduped, remap) = mergeOn(routes, "route_id")
         val f1 = feed.updated("routes", deduped)
         tripsOpt match {
           case Some(trips) =>
@@ -197,8 +191,7 @@ object Clean {
   def removeRedundantStops(feed: Feed): Feed =
     feed.get("stops") match {
       case Some(stops) =>
-        val attrs = stops.columns.filterNot(_ == "stop_id").toSeq
-        val (deduped, remap) = mergeOn(stops, "stop_id", attrs)
+        val (deduped, remap) = mergeOn(stops, "stop_id")
         var f = feed.updated("stops",
           if (deduped.columns.contains("parent_station"))
             remapFk(deduped, "parent_station", remap, "stop_id")
@@ -228,12 +221,8 @@ object Clean {
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
   def removeRedundantServices(feed: Feed)(implicit spark: SparkSession): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val sig = serviceSignatures(feed)
-    val w = Window.partitionBy("dsig")
-    val remap = sig.withColumn("canonical", min("service_id").over(w))
-      .select(col("service_id"), col("canonical"))
-    val keep = remap.where(col("service_id") === col("canonical"))
-      .select("service_id")
+    val (remap, canon) = canonicalIds(serviceSignatures(feed), "service_id", Seq(col("dsig")))
+    val keep = canon.select("service_id")
     var f = feed
     feed.get("calendar").foreach { c =>
       f = f.updated("calendar", c.join(keep, Seq("service_id"), "left_semi"))
@@ -284,11 +273,8 @@ object Clean {
   def removeRedundantShapes(feed: Feed): Feed =
     feed.get("shapes") match {
       case Some(shapes) =>
-        val sig = shapeSignatures(shapes)
-        val w = Window.partitionBy("ssig")
-        val remap = sig.withColumn("canonical", min("shape_id").over(w))
-          .select(col("shape_id"), col("canonical"))
-        val keep = remap.where(col("shape_id") === col("canonical")).select("shape_id")
+        val (remap, canon) = canonicalIds(shapeSignatures(shapes), "shape_id", Seq(col("ssig")))
+        val keep = canon.select("shape_id")
         var f = feed.updated("shapes", shapes.join(keep, Seq("shape_id"), "left_semi"))
         feed.get("trips").foreach { t =>
           f = f.updated("trips", remapFk(t, "shape_id", remap, "shape_id"))
@@ -297,32 +283,35 @@ object Clean {
       case None => feed
     }
 
-  /** Ordered stop-time-sequence signature per trip (bounded group:
-    * stops per trip). Times relative to the trip's first departure so
-    * time-shifted but otherwise identical trips do NOT merge (matching
-    * gtfsclean, which folds those via frequencies instead — C9). */
+  /** Relative stop-time signature per trip: (trip_id, t0 = first
+    * departure, rsig = digest of the ordered (stop_id, arrival − t0,
+    * departure − t0) sequence). Bounded group: stops per trip. */
+  private def relativeStopTimes(st: DataFrame): DataFrame =
+    st.select(col("trip_id"), col("stop_sequence"), col("stop_id"),
+        GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
+        GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
+      .groupBy("trip_id")
+      .agg(min("dep_s").as("t0"),
+        array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
+          col("arr_s"), col("dep_s")))).as("seq"))
+      .select(col("trip_id"), col("t0"),
+        sha2(array_join(transform(col("seq"), x => concat_ws(":",
+          x.getField("stop_id"),
+          (x.getField("arr_s") - col("t0")).cast("string"),
+          (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("rsig"))
+
+  /** Trip signature: route, service, relative stop times and first
+    * departure. The absolute t0 is part of it, so time-shifted but
+    * otherwise identical trips do NOT merge (matching gtfsclean, which
+    * folds those via frequencies instead — C9). */
   private def tripSignatures(feed: Feed): Option[DataFrame] =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
-        val sig = st
-          .select(col("trip_id"), col("stop_sequence"), col("stop_id"),
-            GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
-            GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
-          .groupBy("trip_id")
-          .agg(
-            min("dep_s").as("t0"),
-            array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
-              col("arr_s"), col("dep_s")))).as("seq"))
-          .select(col("trip_id"), col("t0"),
-            sha2(array_join(transform(col("seq"), x => concat_ws(":",
-              x.getField("stop_id"),
-              (x.getField("arr_s") - col("t0")).cast("string"),
-              (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("stsig"))
-        Some(trips.join(sig, Seq("trip_id"), "left")
+        Some(trips.join(relativeStopTimes(st), Seq("trip_id"), "left")
           .withColumn("tsig", sha2(concat_ws("#",
             coalesce(col("route_id"), lit("")),
             coalesce(col("service_id"), lit("")),
-            coalesce(col("stsig"), lit("")),
+            coalesce(col("rsig"), lit("")),
             coalesce(col("t0").cast("string"), lit(""))), 256))
           .select("trip_id", "tsig"))
       case _ => None
@@ -332,10 +321,8 @@ object Clean {
   def removeRedundantTrips(feed: Feed): Feed =
     tripSignatures(feed) match {
       case Some(sig) =>
-        val w = Window.partitionBy("tsig")
-        val remap = sig.withColumn("canonical", min("trip_id").over(w))
-          .select(col("trip_id"), col("canonical"))
-        val keep = remap.where(col("trip_id") === col("canonical")).select("trip_id")
+        val (remap, canon) = canonicalIds(sig, "trip_id", Seq(col("tsig")))
+        val keep = canon.select("trip_id")
         var f = feed
         feed.get("trips").foreach { t =>
           f = f.updated("trips", t.join(keep, Seq("trip_id"), "left_semi"))
@@ -368,14 +355,12 @@ object Clean {
     //   - the service's distinct date set itself rides the SAME
     //     aggregation (collect_set shares the partial-agg pass), so the
     //     exception-date enumeration below is a row-local explode of
-    //     `enc` — round 9 instead JOINED `days` back against enc, which
-    //     made `days` a two-consumer subtree whose exchange had to be
-    //     pinned and re-read (r10 probe: the join leg alone held the
-    //     query at ~2.3 s steady; this shape runs the days pipeline
-    //     exactly once). Per-group state = one service's distinct
-    //     dates — bounded by its calendar span (GTFS feeds span ≤ a few
-    //     years, ≤ ~1500 entries), a dimension bound, never
-    //     corpus-scale;
+    //     `enc`. Joining `days` back against enc instead would make
+    //     `days` a two-consumer subtree whose exchange is pinned and
+    //     re-read; this shape runs the days pipeline exactly once.
+    //     Per-group state = one service's distinct dates — bounded by
+    //     its calendar span (GTFS feeds span ≤ a few years, ≤ ~1500
+    //     entries), a dimension bound, never corpus-scale;
     //   - occurrences of weekday dw in [d0, d1] in CLOSED FORM —
     //     first-occurrence offset o = (dw − weekday(d0)) mod 7, then
     //     1 + ⌊(len − 1 − o) / 7⌋ if o < len else 0 — a day-granular
@@ -403,12 +388,12 @@ object Clean {
     def inMask(dw: Int) =
       (nPossible(dw) > 0 && col(s"na_$dw") === nPossible(dw)).cast("int")
     // `enc` has TWO consumers (newCalendar, newCalDates) whose pruned
-    // subtrees canonicalize differently (round-8 plan audit: the mask
-    // pipeline appeared twice under a repartition pin). enc is ONE ROW
-    // PER SERVICE — dimension-scale at any corpus size (services ≪
-    // stop_times) — so materialize it: persist + deferred unpersist via
-    // ops.Releases (the fixpoint's caller-owns-release pattern;
-    // Verify/Bench/Probe/Explain and the import path drain).
+    // subtrees canonicalize differently, so left lazy the mask pipeline
+    // would run twice. enc is ONE ROW PER SERVICE — dimension-scale at
+    // any corpus size (services ≪ stop_times) — so materialize it:
+    // persist + deferred unpersist via ops.Releases (the fixpoint's
+    // caller-owns-release pattern; Verify/Bench/Probe/Explain and the
+    // import path drain).
     val enc = span
       .select(Seq(col("service_id"), col("d0"), col("d1"), col("n_dates"),
         col("dates")) ++
@@ -447,20 +432,7 @@ object Clean {
   def minimizeStopTimes(feed: Feed)(implicit spark: SparkSession): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
-        val rel = st
-          .select(col("trip_id"), col("stop_sequence"), col("stop_id"),
-            GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
-            GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
-          .groupBy("trip_id")
-          .agg(min("dep_s").as("t0"),
-            array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
-              col("arr_s"), col("dep_s")))).as("seq"))
-          .select(col("trip_id"), col("t0"),
-            sha2(array_join(transform(col("seq"), x => concat_ws(":",
-              x.getField("stop_id"),
-              (x.getField("arr_s") - col("t0")).cast("string"),
-              (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("rsig"))
-        val keyed = trips.join(rel, Seq("trip_id"))
+        val keyed = trips.join(relativeStopTimes(st), Seq("trip_id"))
           .select(col("trip_id"), col("route_id"), col("service_id"),
             col("rsig"), col("t0"))
         val wOrd = Window.partitionBy("route_id", "service_id", "rsig")

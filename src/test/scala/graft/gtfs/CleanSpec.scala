@@ -104,18 +104,6 @@ class CleanSpec extends SparkSpec {
     assert(freq.toSeq == Seq(("09:00:00", "10:30:00", 1800)))
   }
 
-  test("cleaned feed writes back as GTFS CSV (tidied.gtfs parity) and re-reads") {
-    val out = Files.createTempDirectory("tidied")
-    val cleaned = Map(
-      "stops" -> rawFeed("stops"),
-      "routes" -> rawFeed("routes"))
-    Import.writeFeedCsv(cleaned, out)
-    assert(Files.exists(out.resolve("stops.txt")))
-    val reread = Import.readFeed(spark, out)
-    assert(reread("stops").count() == rawFeed("stops").count())
-    assert(ids(reread("routes"), "route_id") == ids(rawFeed("routes"), "route_id"))
-  }
-
   test("full Clean pipeline runs end-to-end and keeps the feed consistent") {
     val f = Clean(rawFeed)
     val trips = ids(f("trips"), "trip_id")

@@ -14,8 +14,8 @@ class ImportPipelineSpec extends SparkSpec {
   // Default to the C17 whole-stage cleaning bypass (a REAL reference
   // path, GTFSTIDY_BEFORE_IMPORT=off): most tests here assert
   // bookkeeping/digest/lock/retention semantics, not cleaned entity
-  // content, and the 14-stage cleaning pipeline dominated the suite's
-  // wall clock (round 7: this spec was 337 s of an 8:50 `sbt test`).
+  // content, and the 14-stage cleaning pipeline would dominate the
+  // suite's wall clock.
   // Tests that DO assert cleaned output (materialized views, K1's
   // C11-merged agency, the clean-log artifact, C19's through-cleaning
   // flow) opt back in with clean = true.
@@ -28,6 +28,16 @@ class ImportPipelineSpec extends SparkSpec {
       tmpDir = root.resolve(s"tmp-$tag"),
       cleanConfig = graft.gtfs.Clean.Config(enabled = clean),
       dsnFilePath = Some(root.resolve("dsn.txt")))
+
+  // the reference's gtfsclean stages, in its order (import.sh:44-111)
+  private val cleanStages = Seq("keep-spec-columns", "default-on-errs",
+    "drop-errs", "check-null-coords", "remove-red-agencies",
+    "remove-red-stops", "remove-red-routes", "remove-red-services",
+    "minimize-services", "minimize-stoptimes", "min-shapes",
+    "remove-red-shapes", "remove-red-trips", "delete-orphans")
+
+  private def stageLines(log: String): Seq[String] =
+    log.linesIterator.filter(_.startsWith("stage\t")).toSeq
 
   test("import → skip-if-unchanged → changed feed → retention of newest 2") {
     val root = Files.createTempDirectory("store")
@@ -138,6 +148,11 @@ class ImportPipelineSpec extends SparkSpec {
     assert(r.deletedDatabases.contains("gtfs_1600000000_dead00"),
       "orphan from aborted import reaped by retention pass")
     assert(store.listImports("gtfs_").size == 1)
+    // C17 bypass: the clean log says cleaning was off, and every stage too
+    val log = Files.readString(
+      store.databasePath(r.newImport.get.dbName).resolve("clean-log.txt"))
+    assert(log.linesIterator.contains("cleaning_enabled\tfalse"))
+    assert(stageLines(log) == cleanStages.map(n => s"stage\t$n\toff"))
   }
 
   test("P3: dangling meta rows (db dir gone) are reconciled away") {
@@ -251,7 +266,9 @@ class ImportPipelineSpec extends SparkSpec {
     val log = db.resolve("clean-log.txt")
     assert(Files.exists(log))
     val logTxt = Files.readString(log)
-    assert(logTxt.contains("delete-orphans\ton") && logTxt.contains("feed_digest"))
+    assert(logTxt.contains("feed_digest"))
+    assert(logTxt.linesIterator.contains("cleaning_enabled\ttrue"))
+    assert(stageLines(logTxt) == cleanStages.map(n => s"stage\t$n\ton"))
   }
 
   test("K1 JDBC: per-import schema load; retention drops the old schema") {

@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
-# CI-shaped importer smoke (r15 VERDICT #3): pin the README quickstart
-# as a repeatable check instead of a by-hand claim. Builds the thin
+# CI-shaped importer smoke: pin the README quickstart as a repeatable
+# check instead of a by-hand claim. Builds the thin
 # jar, zips the TestFeed fixture (single source of truth — dumped via
 # Test/runMain, never duplicated here), then drives `bin/graft-importer`
 # end-to-end TWICE against the same file:// zip and asserts:
 #   run 1: a real import — "importSkipped": false, a newDb is named,
-#          and the DSN file points at it (K4)
+#          the DSN file points at it (K4), and the import's clean-log.txt
+#          records cleaning on with all 14 gtfsclean stages on (C18)
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
 #
@@ -48,6 +49,13 @@ grep -qE '"newDb": "gtfs_[a-z0-9_]+"' <<<"$out1" || {
 db="$(sed -E 's/.*"newDb": "([^"]+)".*/\1/' <<<"$out1")"
 grep -qF "$db" "$work/dsn.txt" || {
   echo "[smoke] FAIL: DSN file does not point at $db" >&2; exit 1; }
+log="$store/dbs/$db/clean-log.txt"
+[[ -f "$log" ]] || { echo "[smoke] FAIL: no clean log at $log" >&2; exit 1; }
+grep -qxF $'cleaning_enabled\ttrue' "$log" || {
+  echo "[smoke] FAIL: clean log does not say cleaning_enabled true" >&2; exit 1; }
+stages_on="$(grep -cE $'^stage\t[a-z-]+\ton$' "$log" || true)"
+[[ "$stages_on" == 14 ]] || {
+  echo "[smoke] FAIL: clean log has $stages_on stage lines on, expected 14" >&2; exit 1; }
 
 echo "[smoke] run 2 (expect the P5 digest short-circuit)"
 out2="$(run_import 2 | grep -F '"importSkipped"')"
@@ -56,4 +64,4 @@ grep -qF '"importSkipped": true' <<<"$out2" || {
 grep -qF '"newDb": null' <<<"$out2" || {
   echo "[smoke] FAIL: run 2 created a db: $out2" >&2; exit 1; }
 
-echo "[smoke] PASS: run1 imported $db, run2 skipped (importSkipped=true)"
+echo "[smoke] PASS: run1 imported $db (14 cleaning stages on), run2 skipped (importSkipped=true)"
